@@ -10515,7 +10515,7 @@ _TAIL = [
     #     sf0.1 audit covers), the big dedup composition
     #     (pipeline_training_prep), two lake paths (cdc_merge,
     #     time_travel), two streaming (restart_rollup,
-    #     session_window), one chat-parity chunked-dispatch witness
+    #     session_window), one chat-parity witness
     #     (op_lag_edge), one TPC-H shape (q3);
     # (d) the SIX r14 additions land in the head automatically
     #     (new entries are never in _TAIL): mm_phash,

@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from poc_spark.plans.dispatch import estimated_size_bytes
+
 # (media_id, kind, payload, meta) — schemas.MEDIA
 DECODED_SCHEMA = (
     "media_id long, kind string, width int, height int, n_frames int, "
@@ -40,20 +42,21 @@ def _fanout_tasks(df: DataFrame, n_tasks: int | None) -> int:
     input's plan-stats size estimate (free — read off the optimized
     plan, no job): one task per ~8 MB of source bytes, floored at the
     session's core count so every slot has work, capped at 4096 so a
-    wild estimate cannot flood the scheduler. Tiny lanes (unit tests at
-    sf0.001, the 4-16 px PNG lane) stop paying a 64-way exchange;
-    a 100 TB corpus fans out with its bytes. Callers can still pass an
-    explicit n_tasks."""
+    wild estimate cannot flood the scheduler. A plan without stats
+    reports Spark's defaultSizeInBytes sentinel (Long.MaxValue); any
+    estimate >= 2^60 is read as unknown and falls back to the core
+    count. Tiny lanes (unit tests at sf0.001, the 4-16 px PNG lane)
+    stop paying a 64-way exchange; a 100 TB corpus fans out with its
+    bytes. Callers can still pass an explicit n_tasks."""
     if n_tasks is not None:
         return n_tasks
-    sc = df.sparkSession.sparkContext
-    cores = sc.defaultParallelism
+    cores = df.sparkSession.sparkContext.defaultParallelism
     try:
-        est = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
+        est = estimated_size_bytes(df)
     except Exception:
-        est = 0
+        return cores
+    if est >= 1 << 60:
+        return cores
     return int(min(max(cores, est >> 23), 4096))
 
 

@@ -21,17 +21,15 @@ Reference: GET /analyze/network/{filename}
   - OP-AGG-NODES: distinct senders of surviving messages — includes
     senders that never formed an edge (backend/main.py:313).
 
-Scale design: the window that orders the chain is partitioned by
-`partition_cols` (default: file_path — one chat per file). A single
-chat is at most a few hundred MB, so per-partition windows keep the
-plan shuffle-light at any corpus size; nothing is global. For a single
-giant totally-ordered stream, the operators below SELF-DISPATCH: when
-no partition cols are given and Catalyst's size estimate crosses the
-threshold (plans/dispatch.py, default ≈1M rows), they route to the
-exactly-equal range-chunked plans in plans/chunked_lag.py (boundary
-stitching, SURVEY.md §4.3) instead of a single-partition window.
-Equality of the two paths is pinned by tests/test_chunked_lag.py and
-tests/test_dispatch.py.
+Scale design: for a multi-chat corpus the window that orders the
+chain is partitioned by `partition_cols` (file_path: one chat per
+file). A single chat is at most a few hundred MB, so per-partition
+windows keep the plan shuffle-light at any corpus size. With no
+partition cols the chain is one global window over the chat's line
+order. Each operator has that single plan: a range-chunked variant
+with boundary stitching was measured slower than the global window on
+every chat size up to a 4M-line export on 4 cores (README.md,
+"Single-chat scale").
 """
 
 from __future__ import annotations
@@ -41,8 +39,58 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.window import WindowSpec
 
-from poc_spark.plans.dispatch import use_chunked
+# Not called here: chatbench/trace.py:99 wraps this name to count
+# dispatch decisions, so it stays importable from this module.
+from poc_spark.plans.dispatch import use_chunked  # noqa: F401
+
+
+def _chain_window(
+    order_cols: Sequence[str], partition_cols: Sequence[str] = ()
+) -> WindowSpec:
+    """The window that orders the message chain: per partition when
+    `partition_cols` are given, else one total order."""
+    base = Window.partitionBy(*partition_cols) if partition_cols else Window
+    return base.orderBy(*order_cols)
+
+
+def _edge_weights(transitions: DataFrame, keep: Sequence[str] = ()) -> DataFrame:
+    """OP-AGG-EDGEW over (`_prev`, `_cur`) sender transitions: drop the
+    chain start and self-transitions, canonicalize the undirected pair
+    (source <= target) and count it, per `keep` group."""
+    return (
+        transitions.filter(
+            F.col("_prev").isNotNull() & (F.col("_prev") != F.col("_cur"))
+        )
+        .select(
+            *keep,
+            F.least("_prev", "_cur").alias("source"),
+            F.greatest("_prev", "_cur").alias("target"),
+        )
+        .groupBy(*keep, "source", "target")
+        .agg(F.count(F.lit(1)).alias("weight"))
+    )
+
+
+def _limited_transitions(
+    df: DataFrame,
+    sender_col: str,
+    order_cols: Sequence[str],
+    limit: int,
+    partition_cols: Sequence[str] = (),
+) -> DataFrame:
+    """(`_prev`, `_cur`) for the first `limit` rows: row_number and lag
+    share one window spec, so the ordered limit and the edge chain cost
+    ONE sort/exchange instead of two. Correct because the limit keeps a
+    prefix of the order: each surviving row's predecessor is also in
+    the prefix, so lag-then-filter(rn <= n) equals filter-then-lag."""
+    w = _chain_window(order_cols, partition_cols)
+    return df.select(
+        F.row_number().over(w).alias("_rn"),
+        F.lag(sender_col).over(w).alias("_prev"),
+        F.col(sender_col).alias("_cur"),
+    ).filter(F.col("_rn") <= limit)
 
 
 def ordered_limit(
@@ -59,15 +107,7 @@ def ordered_limit(
     """
     if not n:
         return df
-    if not partition_cols and use_chunked(df):
-        from poc_spark.plans.chunked_lag import chunked_ordered_limit
-
-        return chunked_ordered_limit(df, n, order_cols)
-    w = (
-        Window.partitionBy(*partition_cols).orderBy(*order_cols)
-        if partition_cols
-        else Window.orderBy(*order_cols)
-    )
+    w = _chain_window(order_cols, partition_cols)
     return (
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= n)
@@ -95,29 +135,14 @@ def lag_edges(
     columns in the result — one graph PER group, the true production
     shape at scale: every window and the final aggregate shuffle on
     the group key, nothing is global."""
-    if not partition_cols and use_chunked(df):
-        from poc_spark.plans.chunked_lag import chunked_lag_edges
-
-        return chunked_lag_edges(df, sender_col, order_cols)
-    w = (
-        Window.partitionBy(*partition_cols).orderBy(*order_cols)
-        if partition_cols
-        else Window.orderBy(*order_cols)
-    )
+    w = _chain_window(order_cols, partition_cols)
     keep = list(partition_cols) if group_output else []
-    s = F.col(sender_col)
-    prev = F.lag(sender_col).over(w)
-    return (
-        df.select(*keep, prev.alias("_prev"), s.alias("_cur"))
-        .filter(F.col("_prev").isNotNull() & (F.col("_prev") != F.col("_cur")))
-        .select(
-            *keep,
-            F.least("_prev", "_cur").alias("source"),
-            F.greatest("_prev", "_cur").alias("target"),
-        )
-        .groupBy(*keep, "source", "target")
-        .agg(F.count(F.lit(1)).alias("weight"))
+    transitions = df.select(
+        *keep,
+        F.lag(sender_col).over(w).alias("_prev"),
+        F.col(sender_col).alias("_cur"),
     )
+    return _edge_weights(transitions, keep)
 
 
 def lag_edges_limited(
@@ -127,57 +152,10 @@ def lag_edges_limited(
     limit: int,
     partition_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Fused OP-LIMIT-N + OP-LAG-EDGE: row_number and lag share one
-    window spec, so Spark computes both in a single sort/exchange pass
-    instead of two. Correct because the limit keeps a prefix of the
-    order: each surviving row's predecessor is also in the prefix, so
-    lag-then-filter(rn <= n) equals filter-then-lag.
-
-    Above the scale threshold the fused single window would itself be
-    the bottleneck — dispatch to chunked limit-then-lag (equal by the
-    same prefix property; the chunked limit prunes whole chunks before
-    the lag ever runs)."""
-    if not partition_cols and use_chunked(df):
-        from poc_spark.plans.chunked_lag import (
-            chunked_lag_edges,
-            chunked_ordered_limit,
-        )
-
-        # localCheckpoint (NOT .cache): the chunked lag re-derives chunk
-        # boundaries over the prefix (an approxQuantile pass + the final
-        # job), so a materialization barrier is required — but .cache()
-        # registers in the session CacheManager forever; checkpointed
-        # blocks are dropped when the DataFrame is garbage-collected, so
-        # repeated calls in a long session can't accumulate storage.
-        # (Lineage is truncated: on executor loss the block recomputes
-        # from the checkpoint's parent, acceptable for a derived prefix.)
-        prefix = chunked_ordered_limit(df, limit, order_cols).localCheckpoint(
-            eager=True
-        )
-        return chunked_lag_edges(prefix, sender_col, order_cols)
-    w = (
-        Window.partitionBy(*partition_cols).orderBy(*order_cols)
-        if partition_cols
-        else Window.orderBy(*order_cols)
-    )
-    s = F.col(sender_col)
-    return (
-        df.select(
-            F.row_number().over(w).alias("_rn"),
-            F.lag(sender_col).over(w).alias("_prev"),
-            s.alias("_cur"),
-        )
-        .filter(
-            (F.col("_rn") <= limit)
-            & F.col("_prev").isNotNull()
-            & (F.col("_prev") != F.col("_cur"))
-        )
-        .select(
-            F.least("_prev", "_cur").alias("source"),
-            F.greatest("_prev", "_cur").alias("target"),
-        )
-        .groupBy("source", "target")
-        .agg(F.count(F.lit(1)).alias("weight"))
+    """Fused OP-LIMIT-N + OP-LAG-EDGE in one window pass (see
+    _limited_transitions)."""
+    return _edge_weights(
+        _limited_transitions(df, sender_col, order_cols, limit, partition_cols)
     )
 
 
@@ -201,45 +179,9 @@ def interaction_graph(
         df = df.filter(F.col(date_col).between(F.lit(start_date), F.lit(end_date)))
 
     if limit:
-        if not partition_cols and use_chunked(df):
-            # scale path: chunked ordered limit prunes chunks before the
-            # chunked lag; both per-chunk, never single-partition.
-            # localCheckpoint, not cache — see lag_edges_limited.
-            from poc_spark.plans.chunked_lag import (
-                chunked_lag_edges,
-                chunked_ordered_limit,
-            )
-
-            prefix = chunked_ordered_limit(df, limit, order_cols).localCheckpoint(
-            eager=True
-        )
-            nodes = prefix.select(F.col(sender_col).alias("id")).distinct()
-            edges = chunked_lag_edges(prefix, sender_col, order_cols)
-            return nodes, edges
-        # fused single-window pass: row_number + lag share the window
-        # spec, so the ordered limit and the edge chain cost ONE
-        # sort/exchange instead of two.
-        w = (
-            Window.partitionBy(*partition_cols).orderBy(*order_cols)
-            if partition_cols
-            else Window.orderBy(*order_cols)
-        )
-        base = df.select(
-            F.row_number().over(w).alias("_rn"),
-            F.lag(sender_col).over(w).alias("_prev"),
-            F.col(sender_col).alias("_cur"),
-        ).filter(F.col("_rn") <= limit)
+        base = _limited_transitions(df, sender_col, order_cols, limit, partition_cols)
         nodes = base.select(F.col("_cur").alias("id")).distinct()
-        edges = (
-            base.filter(F.col("_prev").isNotNull() & (F.col("_prev") != F.col("_cur")))
-            .select(
-                F.least("_prev", "_cur").alias("source"),
-                F.greatest("_prev", "_cur").alias("target"),
-            )
-            .groupBy("source", "target")
-            .agg(F.count(F.lit(1)).alias("weight"))
-        )
-        return nodes, edges
+        return nodes, _edge_weights(base)
 
     nodes = df.select(F.col(sender_col).alias("id")).distinct()
     edges = lag_edges(df, sender_col, order_cols, partition_cols)

@@ -475,30 +475,6 @@ def unigram_logprob(
     )
 
 
-# the perplexity self-dispatch thresholds on the SCORED plan's
-# Catalyst estimate, which is much wider per row than the raw-scan
-# estimate the lag operators' 24 MiB key was calibrated for (measured:
-# ~700 B/doc at sf0.01/sf0.1 vs ~22 B/row for event scans). 700 B x
-# the ~1.1M-row policy point ≈ 768 MiB — same row-count crossover,
-# different byte denominator (r5 self-review: reusing the 24 MiB key
-# directly tripped chunked ~30x too early).
-_SCORED_MIN_BYTES_KEY = "spark.poc.ntile.minScoredBytes"
-_SCORED_DEFAULT_MIN_BYTES = 768 * 1024 * 1024
-
-
-def _should_chunk(scored: DataFrame) -> bool:
-    from poc_spark.plans.dispatch import CHUNK_FORCE_KEY, estimated_size_bytes
-
-    conf = scored.sparkSession.conf
-    force = conf.get(CHUNK_FORCE_KEY, None)
-    if force is not None:
-        return force.strip().lower() == "true"
-    threshold = int(
-        conf.get(_SCORED_MIN_BYTES_KEY, str(_SCORED_DEFAULT_MIN_BYTES))
-    )
-    return estimated_size_bytes(scored) >= threshold
-
-
 def perplexity_buckets(
     df: DataFrame,
     text_col: str = "text",
@@ -522,15 +498,16 @@ def perplexity_buckets(
     operator SELF-DISPATCHES to the EXACT chunk-parallel twin
     (plans/ntile.chunked_ntile: range chunks + driver prefix-sum of
     chunk counts + per-chunk windows — same buckets bit-for-bit,
-    pinned in tests/test_plans.py), same policy as the lag/limit
-    operators. Pass `num_chunks` to force the chunked form explicitly.
-    CCNet's own approx-threshold variant remains a valid cheaper
-    fallback, but an exact distributed form exists so nothing forces
-    the approximation."""
+    pinned in tests/test_plans.py). Pass `num_chunks` to force the
+    chunked form explicitly. CCNet's own approx-threshold variant
+    remains a valid cheaper fallback, but an exact distributed form
+    exists so nothing forces the approximation."""
     from pyspark.sql import Window
 
+    from poc_spark.plans.dispatch import use_chunked
+
     scored = unigram_logprob(df, text_col, id_col)
-    if num_chunks is None and _should_chunk(scored):
+    if num_chunks is None and use_chunked(scored):
         num_chunks = 32
     if num_chunks:
         from poc_spark.plans.ntile import chunked_ntile
@@ -1607,7 +1584,7 @@ def pack_documents_greedy(
     computes its LOCAL cumsum in parallel and adds its offset. The
     result is identical for ANY contiguous chunking, so the chunk
     count is a pure parallelism knob — the same discipline as
-    plans/chunked_lag.py. Exact LONG arithmetic throughout."""
+    plans/ntile.py. Exact LONG arithmetic throughout."""
     toks = df.select(
         F.col(id_col).alias("id"),
         F.size(_tokens(F.col(text_col))).cast("long").alias("n_toks"),

@@ -1,24 +1,21 @@
-"""Size-threshold dispatch between global-window and chunked plans.
+"""Size-threshold dispatch between a global-window ntile and its
+chunk-parallel twin.
 
-The reference's flagship semantics need a TOTAL order (one chat
-stream); a global `Window.orderBy(...)` expresses it but collapses to a
-single partition — fine below ~1M rows (the chunked form costs 2 extra
-fixed jobs and benches slower there), hostile at 100 TB. CLAUDE.md
-policy: global-window forms are the default below ~1M rows; the chunked
-scale paths (plans/chunked_lag.py) take over above.
+`ntile(n) OVER (ORDER BY ...)` collapses to a single partition: fine
+below ~1M rows, where the chunked form's extra fixed jobs make it
+slower, hostile far above. `use_chunked(df)` consults Catalyst's
+optimized-plan sizeInBytes estimate (free, no job, filter-selectivity-
+aware) against a byte threshold; textstats.perplexity_buckets routes
+to the exactly-equal plans/ntile.chunked_ntile when it trips (measured
+crossover: NTILE_DEMO.json). Unknown/huge estimates (post-join plans
+without stats) dispatch chunked: the safe direction at scale.
 
-This module makes the operators enforce that policy automatically:
-`use_chunked(df)` consults Catalyst's optimized-plan sizeInBytes
-estimate — free, no job, filter-selectivity-aware — against a
-configurable byte threshold. Callers (operators/network.py) route to
-the exactly-equal chunked implementation when it trips. Unknown/huge
-estimates (post-join plans without stats) dispatch chunked: the safe
-direction at scale.
+The threshold is calibrated on the SCORED documents plan that
+perplexity_buckets tiles: ~700 B/doc in Catalyst's estimate at
+sf0.01/sf0.1, so 768 MiB ≈ 1.1M documents.
 
 Conf keys:
-  spark.poc.chunkedWindow.minBytes  estimate threshold (default 24 MiB
-                                    ≈ 1.1M event rows at the measured
-                                    ~22 B/row parquet-scan estimate)
+  spark.poc.ntile.minScoredBytes    estimate threshold (default 768 MiB)
   spark.poc.chunkedWindow.force     "true"/"false" overrides the
                                     estimate entirely (tests; ops)
 """
@@ -27,9 +24,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-CHUNK_MIN_BYTES_KEY = "spark.poc.chunkedWindow.minBytes"
+CHUNK_MIN_BYTES_KEY = "spark.poc.ntile.minScoredBytes"
 CHUNK_FORCE_KEY = "spark.poc.chunkedWindow.force"
-DEFAULT_MIN_BYTES = 24 * 1024 * 1024
+DEFAULT_MIN_BYTES = 768 * 1024 * 1024
 
 
 def estimated_size_bytes(df: DataFrame) -> int:
@@ -39,7 +36,7 @@ def estimated_size_bytes(df: DataFrame) -> int:
 
 
 def use_chunked(df: DataFrame) -> bool:
-    """True when a global-window operator should take the range-chunked
+    """True when a global-window ntile should take the range-chunked
     scale path for this input."""
     conf = df.sparkSession.conf
     force = conf.get(CHUNK_FORCE_KEY, None)

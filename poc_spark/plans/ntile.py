@@ -3,8 +3,7 @@ path for equal-count quantile bucketing over one global total order.
 
 ntile(n) OVER (ORDER BY ...) is a single-partition window: every row
 through one task. But ntile only needs each row's GLOBAL RANK, and a
-global rank decomposes over range chunks exactly like chunked_lag's
-order does:
+global rank decomposes over range chunks:
 
   1. range-chunk on the leading order column (approx quantile bounds;
      ties never straddle a chunk because bucketing is strict `>`);
@@ -28,7 +27,46 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from poc_spark.plans.chunked_lag import _range_chunks
+
+def _numeric_key(df: DataFrame, key: str):
+    """Numeric shadow of the leading order column for approxQuantile /
+    range bucketing. Timestamps (LTZ and NTZ — neither casts to double)
+    become epoch microseconds; µs fit a double's 53-bit mantissa."""
+    from pyspark.sql.types import TimestampNTZType, TimestampType
+
+    dt = df.schema[key].dataType
+    if isinstance(dt, TimestampNTZType):
+        return F.expr(
+            f"CAST(timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00',"
+            f" `{key}`) AS DOUBLE)"
+        )
+    if isinstance(dt, TimestampType):
+        return F.unix_micros(F.col(key)).cast("double")
+    return F.col(key).cast("double")
+
+
+def _range_chunks(
+    df: DataFrame, key: str, num_chunks: int
+) -> DataFrame:
+    """df + `_key_num` (numeric shadow of `key`) + `_chunk` (range
+    bucket). Approximate quantile bounds, deduped (a skewed key yields
+    duplicate quantiles, which would create guaranteed-empty chunks);
+    bucketing is strict `>`, so rows tied on the key can never straddle
+    a chunk boundary — the property the per-chunk ranks' exactness
+    relies on."""
+    keyed = df.withColumn("_key_num", _numeric_key(df, key))
+    fractions = [i / num_chunks for i in range(1, num_chunks)]
+    raw_bounds = (
+        keyed.approxQuantile("_key_num", fractions, 0.001)
+        if num_chunks > 1
+        else []
+    )
+    bounds = sorted(set(raw_bounds))
+    chunk = F.lit(0)
+    for i, b in enumerate(bounds):
+        chunk = F.when(F.col("_key_num") > F.lit(b), i + 1).otherwise(chunk)
+    return keyed.withColumn("_chunk", chunk)
+
 
 
 def ntile_rank_to_bucket(rank, total: int, n_buckets: int):

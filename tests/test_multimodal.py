@@ -111,6 +111,20 @@ def test_frame_sample_plan(spark, media):
     assert len([r for r in rows if r["media_id"] == 1]) == expect
 
 
+def test_fanout_without_plan_stats_uses_core_count(spark):
+    """A DataFrame built from an RDD has no size stats: Catalyst reports
+    the defaultSizeInBytes sentinel (Long.MaxValue). That must read as
+    unknown and fan out to the core count, not to the 4096-task cap."""
+    from poc_spark.operators.multimodal import _fanout_tasks
+    from poc_spark.plans.dispatch import estimated_size_bytes
+
+    rdd = spark.sparkContext.parallelize([(1, "a"), (2, "b")])
+    df = spark.createDataFrame(rdd, "id long, text string")
+    assert estimated_size_bytes(df) >= 1 << 60  # the sentinel, not a size
+    assert _fanout_tasks(df, None) == spark.sparkContext.defaultParallelism
+    assert _fanout_tasks(df, 7) == 7
+
+
 def test_resize_ppm_kernel(spark):
     import hashlib
 

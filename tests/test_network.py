@@ -4,6 +4,7 @@ interaction-graph pipeline (SURVEY.md §5.2, FIXTURES.md F1/F7)."""
 from __future__ import annotations
 
 import random
+import re
 
 import pytest
 
@@ -87,6 +88,67 @@ def test_ordered_limit(spark):
 def test_limit_zero_means_no_limit(spark):
     # reference `if limit and count >= limit` — 0 is falsy
     assert _graph(spark, GOLDEN_LINES, limit=0) == _graph(spark, GOLDEN_LINES)
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _window_specs(plan: str) -> list[str]:
+    """The partition/order part of every windowspecdefinition(...) in
+    the plan (the frame differs between row_number and lag)."""
+    return re.findall(r"windowspecdefinition\(([^)]*?),\s*specifiedwindowframe", plan)
+
+
+def test_limited_graph_plans_one_fused_window(spark):
+    """A limited request costs one sort: row_number and lag share one
+    window spec in a single Window operator. No plan from
+    interaction_graph carries a range-chunk column, even with the
+    chunked force conf on (it now reaches only the ntile fork)."""
+    from poc_spark.plans.dispatch import CHUNK_FORCE_KEY
+
+    msgs = parse_chat_lines(chat_lines_from_strings(spark, GOLDEN_LINES))
+    _, edges = interaction_graph(msgs, limit=5)
+    plan = _plan(edges)
+    specs = _window_specs(plan)
+    assert len(set(specs)) == 1, plan
+    windows = [ln for ln in plan.splitlines() if ln.lstrip("+-: ").startswith("Window ")]
+    assert len(windows) == 1, plan
+    assert "row_number()" in windows[0] and "lag(" in windows[0], plan
+    assert plan.count("Sort [") == 1, plan
+
+    spark.conf.set(CHUNK_FORCE_KEY, "true")
+    try:
+        for kw in ({}, {"limit": 5}, {"start_date": "2023-10-01", "end_date": "2023-10-04"}):
+            for df in interaction_graph(msgs, **kw):
+                assert "_chunk" not in _plan(df), kw
+    finally:
+        spark.conf.unset(CHUNK_FORCE_KEY)
+
+
+def test_fused_limit_equals_limit_then_lag(spark, sf_dir):
+    """The fused row_number+lag window equals the unfused plan, ordered
+    limit first and lag over the prefix, on the events table."""
+    from poc_spark.operators.network import (
+        lag_edges,
+        lag_edges_limited,
+        ordered_limit,
+    )
+    from poc_spark.sources.catalog import load_table
+
+    events = load_table(spark, sf_dir, "events")
+    order = ("ts", "event_id")
+    prefix = ordered_limit(events, 400, order)
+    want = sorted(map(tuple, lag_edges(prefix, "user_id", order).collect()))
+    fused = lag_edges_limited(events, "user_id", order, 400)
+    assert sorted(map(tuple, fused.collect())) == want
+    nodes, edges = interaction_graph(
+        events, sender_col="user_id", date_col="ts", order_cols=order, limit=400
+    )
+    assert sorted(map(tuple, edges.collect())) == want
+    assert sorted(r[0] for r in nodes.collect()) == sorted(
+        {r[0] for r in prefix.select("user_id").collect()}
+    )
 
 
 def _random_chat(rng: random.Random, n: int) -> list[str]:

@@ -112,6 +112,29 @@ def test_chunked_ntile_remainder_shapes(spark):
         assert got == want, (n_rows, n_buckets)
 
 
+def test_skewed_key_duplicate_quantiles(spark):
+    """95% of rows share one key value, so approxQuantile returns
+    duplicate bounds; the range chunking dedups them, and the chunk
+    rank offsets must keep the ranks adjacent across the empty chunks
+    so chunked_ntile still equals the global window."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from poc_spark.plans.ntile import chunked_ntile
+
+    rows = [(i, 1) for i in range(95)] + [(95 + i, 2 + i) for i in range(5)]
+    df = spark.createDataFrame(rows, "id long, key long")
+    bounds = df.approxQuantile("key", [i / 16 for i in range(1, 16)], 0.001)
+    assert len(set(bounds)) < len(bounds)  # the input does skew the bounds
+    w = Window.orderBy("key", "id")
+    want = {(r["id"], r["t"]) for r in df.withColumn("t", F.ntile(7).over(w)).collect()}
+    got = {
+        (r["id"], r["bucket_n"])
+        for r in chunked_ntile(df, 7, ("key", "id"), num_chunks=16).collect()
+    }
+    assert got == want
+
+
 def test_grouping_sets_single_pass_expand(spark, sf_dir):
     """GROUPING SETS must plan as ONE scan + Expand + one aggregate —
     not a union of per-slice scans — and equal the two-groupby union."""

@@ -84,8 +84,8 @@ def main() -> int:
         else:
             # --conf k=v (repeatable): session confs applied before the
             # run — used by the cross-scale gate to force the SCALE side
-            # of adaptive-dispatch forks (chunked windows/ntile, open-
-            # vocab jaccard/containment) against the same oracles
+            # of adaptive-dispatch forks (chunked ntile, open-vocab
+            # jaccard/containment) against the same oracles
             if "=" not in argv[1]:
                 print(f"usage: --conf value must be key=value, got {argv[1]!r}")
                 return 2

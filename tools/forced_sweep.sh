@@ -3,10 +3,12 @@
 # assembled ad hoc each round): every scale-side fork of an
 # adaptive-dispatch operator is forced ON simultaneously, against the
 # SAME DuckDB oracles as the default sweep, at sf0.01. Thirteen forces:
-#   chunked windows, zero-threshold ntile, open-vocab jaccard/
-#   containment, always-incremental BPE, manifest pointer, fake object
-#   store with 2-entry listing pages and 64-byte copy chunks, symlink
-#   fast path off, the wedge-broadcast-off graph path, the
+#   chunked windows (this force now reaches only the ntile fork; the
+#   interaction-graph operators have one plan), zero-threshold ntile,
+#   open-vocab jaccard/containment, always-incremental BPE, manifest
+#   pointer, fake object store with 2-entry listing pages and 64-byte
+#   copy chunks, symlink fast path off, the wedge-broadcast-off graph
+#   path, the
 #   boilerplate shuffle anti-join (broadcast budget forced to 0), the
 #   PassJoin k=1 fallback (FastSS deletion-neighborhood dispatch
 #   forced OFF so the long-string path keeps an oracle run), and the
